@@ -4,6 +4,15 @@ Each function maps one reference aggregate to a declarative DataFrame plan.
 All of them are partial-aggregation friendly (map-side combine before the
 exchange), which is what makes them survive 100 TB: the shuffle moves one row
 per (group key × partition), not per input row.
+
+``minute_rollup`` is the one pass over parsed rows that every aggregate and
+alert sink re-aggregates: A1-A4 here (the ``*_from_rollup`` functions) and
+the anomaly series (anomaly.error_series / volume_series). It is the analog
+of ClickHouse filling its hourly and per-minute materialized views as rows
+are inserted (001_clickhouse_schema.sql:37-62) instead of re-reading the fact
+table per view. The row-level functions build the rollup themselves;
+plans/job.run builds it once per run and persists it for all of its sinks.
+The rollup grows with sources × templates × minutes, not with rows.
 """
 
 from __future__ import annotations
@@ -12,22 +21,42 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .route import severity_class_expr
 
+SIZE_COLUMNS = ("original_size", "compressed_size")
+
+
+def minute_rollup(parsed: DataFrame) -> DataFrame:
+    """Row count and Σ of each size column the rows carry (the detectors need
+    only the count), per (source, template_id, template, minute).
+    ``template`` is in the key for ``severity_class_expr``; ``template_id``
+    determines it, so it adds no groups."""
+    sizes = [F.sum(c).alias(f"total_{c}") for c in SIZE_COLUMNS if c in parsed.columns]
+    return parsed.groupBy(
+        "source", "template_id", "template", F.date_trunc("minute", "ts").alias("minute")
+    ).agg(F.count(F.lit(1)).alias("log_count"), *sizes)
+
 
 def global_stats(parsed: DataFrame, exact_distinct: bool = True) -> DataFrame:
+    """A1 over parsed rows; see ``global_stats_from_rollup``."""
+    return global_stats_from_rollup(minute_rollup(parsed), exact_distinct)
+
+
+def global_stats_from_rollup(rollup: DataFrame, exact_distinct: bool = True) -> DataFrame:
     """A1 — GetStats (internal/storage/clickhouse/client.go:273-300):
     count, uniq(template_id), Σ original, Σ compressed, derived ratio.
     ClickHouse ``uniq`` is approximate → ``approx_count_distinct`` is the
-    faithful mapping; exact mode is for oracle equality."""
+    faithful mapping; exact mode is for oracle equality. Both see the same
+    distinct template_ids in the rollup as in the rows."""
     uniq = (
         F.countDistinct("template_id")
         if exact_distinct
         else F.approx_count_distinct("template_id")
     )
-    return parsed.agg(
-        F.count(F.lit(1)).alias("total_logs"),
+    return rollup.agg(
+        # Σ over zero rollup rows is NULL where count(*) over zero rows is 0.
+        F.coalesce(F.sum("log_count"), F.lit(0).cast("long")).alias("total_logs"),
         uniq.alias("unique_templates"),
-        F.sum("original_size").cast("long").alias("total_original_size"),
-        F.sum("compressed_size").cast("long").alias("total_compressed_size"),
+        F.sum("total_original_size").cast("long").alias("total_original_size"),
+        F.sum("total_compressed_size").cast("long").alias("total_compressed_size"),
     ).select(
         "*",
         F.when(
@@ -38,36 +67,52 @@ def global_stats(parsed: DataFrame, exact_distinct: bool = True) -> DataFrame:
 
 
 def hourly_rollup(parsed: DataFrame) -> DataFrame:
+    """A2 over parsed rows; see ``hourly_from_rollup``."""
+    return hourly_from_rollup(minute_rollup(parsed))
+
+
+def hourly_from_rollup(rollup: DataFrame) -> DataFrame:
     """A2 — hourly MV (001_clickhouse_schema.sql:37-48):
     GROUP BY source, template_id, toStartOfHour(ts)."""
-    return parsed.groupBy(
-        "source", "template_id", F.date_trunc("hour", "ts").alias("hour")
+    return rollup.groupBy(
+        "source", "template_id", F.date_trunc("hour", "minute").alias("hour")
     ).agg(
-        F.count(F.lit(1)).alias("log_count"),
-        F.sum("original_size").cast("long").alias("total_original_size"),
-        F.sum("compressed_size").cast("long").alias("total_compressed_size"),
+        F.sum("log_count").alias("log_count"),
+        F.sum("total_original_size").cast("long").alias("total_original_size"),
+        F.sum("total_compressed_size").cast("long").alias("total_compressed_size"),
     )
 
 
 def error_rates(parsed: DataFrame) -> DataFrame:
+    """A3 over parsed rows; see ``error_rates_from_rollup``."""
+    return error_rates_from_rollup(minute_rollup(parsed))
+
+
+def error_rates_from_rollup(rollup: DataFrame) -> DataFrame:
     """A3 — per-minute error-rate MV (001_clickhouse_schema.sql:51-62):
     after the J1 template join, countIf(pattern LIKE %ERROR%/%WARN%) + count
     per (source, minute)."""
     sev = severity_class_expr(F.col("template"))
-    return parsed.groupBy("source", F.date_trunc("minute", "ts").alias("minute")).agg(
-        F.count(F.when(sev == "error", 1)).alias("error_count"),
-        F.count(F.when(sev == "warn", 1)).alias("warn_count"),
-        F.count(F.lit(1)).alias("total_count"),
+    n = F.col("log_count")
+    return rollup.groupBy("source", "minute").agg(
+        F.sum(F.when(sev == "error", n).otherwise(0)).alias("error_count"),
+        F.sum(F.when(sev == "warn", n).otherwise(0)).alias("warn_count"),
+        F.sum(n).alias("total_count"),
     )
 
 
 def top_templates(parsed: DataFrame, k: int = 10) -> DataFrame:
+    """A4/O3 over parsed rows; see ``top_templates_from_rollup``."""
+    return top_templates_from_rollup(minute_rollup(parsed), k)
+
+
+def top_templates_from_rollup(rollup: DataFrame, k: int = 10) -> DataFrame:
     """A4/O3 — top-K templates by count (001_clickhouse_schema.sql:65).
     groupBy → orderBy → limit compiles to TakeOrderedAndProject: each task
     keeps only K rows, the driver merges — no global sort."""
     return (
-        parsed.groupBy("template_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        rollup.groupBy("template_id")
+        .agg(F.sum("log_count").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("template_id"))
         .limit(k)
     )

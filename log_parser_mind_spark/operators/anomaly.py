@@ -14,6 +14,9 @@ arrival time), and emits routed alert rows.
   volume path: per-source counts per minute → z = |recent_mean − μ|/σ,
                alert if z > volume_threshold; spike vs drop by sign
                (main.go:164-222)
+
+Both series are re-aggregations of ``aggregate.minute_rollup``, so the
+detectors share the one pass over the rows every aggregate sink uses.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import AnomalyConfig
+from .aggregate import baselines, minute_rollup, recent_window
 from .route import severity_class_expr
 
 
@@ -34,21 +38,23 @@ def severity_expr(z) -> F.Column:
     )
 
 
-def error_series(parsed: DataFrame) -> DataFrame:
+def error_series(rollup: DataFrame) -> DataFrame:
     """Per-(template_id, minute) ERROR-row counts — the RecordError feed
-    (cmd/anomaly/main.go:82-97), pre-bucketed to minutes for scale."""
+    (cmd/anomaly/main.go:82-97), pre-bucketed to minutes for scale, from
+    ``aggregate.minute_rollup``."""
     return (
-        parsed.filter(severity_class_expr(F.col("template")) == "error")
-        .groupBy(F.col("template_id").alias("key"), F.date_trunc("minute", "ts").alias("ts"))
-        .agg(F.count(F.lit(1)).cast("double").alias("value"))
+        rollup.filter(severity_class_expr(F.col("template")) == "error")
+        .groupBy(F.col("template_id").alias("key"), F.col("minute").alias("ts"))
+        .agg(F.sum("log_count").cast("double").alias("value"))
     )
 
 
-def volume_series(parsed: DataFrame) -> DataFrame:
-    """Per-(source, minute) row counts — the RecordVolume feed (main.go:100-111)."""
-    return parsed.groupBy(
-        F.col("source").alias("key"), F.date_trunc("minute", "ts").alias("ts")
-    ).agg(F.count(F.lit(1)).cast("double").alias("value"))
+def volume_series(rollup: DataFrame) -> DataFrame:
+    """Per-(source, minute) row counts — the RecordVolume feed (main.go:100-111),
+    from ``aggregate.minute_rollup``."""
+    return rollup.groupBy(F.col("source").alias("key"), F.col("minute").alias("ts")).agg(
+        F.sum("log_count").cast("double").alias("value")
+    )
 
 
 def _detect(
@@ -59,8 +65,6 @@ def _detect(
     alert_type_expr,
     config: AnomalyConfig,
 ) -> DataFrame:
-    from .aggregate import baselines, recent_window
-
     base = baselines(series).filter(F.col("n_points") >= config.min_points)
     recent = recent_window(
         series, now, window_minutes=config.window_minutes, agg=recent_agg
@@ -98,28 +102,39 @@ def _detect(
     )
 
 
-def detect_error_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
-    """checkErrorAnomaly (main.go:113-162) over event time."""
-    config = config or AnomalyConfig()
+def _error_alerts(rollup: DataFrame, now: str, config: AnomalyConfig) -> DataFrame:
     return _detect(
-        error_series(parsed), now, config.error_threshold, "sum",
-        F.lit("error_spike"), config,
+        error_series(rollup), now, config.error_threshold, "sum", F.lit("error_spike"), config
     )
 
 
-def detect_volume_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
-    """checkVolumeAnomaly (main.go:164-222): |z|, spike vs drop by direction."""
-    config = config or AnomalyConfig()
+def _volume_alerts(rollup: DataFrame, now: str, config: AnomalyConfig) -> DataFrame:
     alert_type = F.when(F.col("recent") < F.col("mean"), F.lit("volume_drop")).otherwise(
         F.lit("volume_spike")
     )
     return _detect(
-        volume_series(parsed), now, config.volume_threshold, "avg", alert_type, config
+        volume_series(rollup), now, config.volume_threshold, "avg", alert_type, config
     )
+
+
+def detect_error_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
+    """checkErrorAnomaly (main.go:113-162) over event time."""
+    return _error_alerts(minute_rollup(parsed), now, config or AnomalyConfig())
+
+
+def detect_volume_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
+    """checkVolumeAnomaly (main.go:164-222): |z|, spike vs drop by direction."""
+    return _volume_alerts(minute_rollup(parsed), now, config or AnomalyConfig())
 
 
 def detect_all(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
     """Both detectors → one routed alerts sink (alert channel T8 → table)."""
-    return detect_error_anomalies(parsed, now, config).unionByName(
-        detect_volume_anomalies(parsed, now, config)
-    )
+    return detect_all_from_rollup(minute_rollup(parsed), now, config)
+
+
+def detect_all_from_rollup(
+    rollup: DataFrame, now: str, config: AnomalyConfig | None = None
+) -> DataFrame:
+    """``detect_all`` over ``aggregate.minute_rollup`` of the parsed rows."""
+    config = config or AnomalyConfig()
+    return _error_alerts(rollup, now, config).unionByName(_volume_alerts(rollup, now, config))

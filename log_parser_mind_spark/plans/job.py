@@ -6,24 +6,34 @@ boundaries entirely (SURVEY §3.1 "Spark rebuild of this path"). Stages commit
 snapshots through the manifest store, so a killed run resumes from the last
 committed stage (``run`` is idempotent per run_id).
 
+With a root, the parse stage is committed as the ``parsed_turns`` snapshot,
+which is then scanned once per route sink (each a filter of the rows) and
+once more to build ``aggregate.minute_rollup``; ``run`` persists that rollup
+until it returns. Every aggregate and the alerts sink re-aggregate it, so
+they cost one scan of the snapshot between them, not one each.
+
 In-memory mode (``root=None``) returns the sink DataFrames without writing —
 used by tests, __spark_entry__ and the DuckDB oracle comparisons.
 """
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..operators import aggregate as agg
-from ..operators.anomaly import detect_all
+from ..operators.anomaly import detect_all_from_rollup
 from ..operators.enrich import enrich_with_lookup, role_tool_lookup
 from ..operators.parse import parse_pipeline
 from ..operators.route import DEFAULT_ROUTES, with_route
 from ..sources.manifest import SnapshotStore
+
+logger = logging.getLogger(__name__)
 
 PARSED_SORT = ["source", "template_id", "ts"]  # 001_clickhouse_schema.sql:21 sort key
 
@@ -63,7 +73,7 @@ def timed_pipeline_stages(spark, transcripts, config=None) -> dict[str, float]:
         snap = spark.read.parquet(f"{tmp}/parsed")
         t("aggregates", lambda: [
             df.write.format("noop").mode("overwrite").save()
-            for df in _downstream_sinks(snap, config, None).values()
+            for df in _downstream_sinks(snap, agg.minute_rollup(snap), config, None).values()
         ])
     finally:
         _shutil.rmtree(tmp, ignore_errors=True)
@@ -79,21 +89,22 @@ class JobResult:
 
 
 def _downstream_sinks(
-    parsed: DataFrame, config: PipelineConfig, now: str | None
+    parsed: DataFrame, rollup: DataFrame, config: PipelineConfig, now: str | None
 ) -> dict[str, DataFrame]:
     """Aggregate/fan-out sinks derived from an (already enriched+routed)
     parsed_turns DataFrame — reusable over either the lazy plan or a
-    committed snapshot."""
+    committed snapshot. The routes filter ``parsed``; the aggregates and the
+    alerts re-aggregate ``rollup``, its ``aggregate.minute_rollup``."""
     sinks: dict[str, DataFrame] = {
-        "hourly_rollup": agg.hourly_rollup(parsed),
-        "error_rates": agg.error_rates(parsed),
-        "top_templates": agg.top_templates(parsed),
-        "global_stats": agg.global_stats(parsed),
+        "hourly_rollup": agg.hourly_from_rollup(rollup),
+        "error_rates": agg.error_rates_from_rollup(rollup),
+        "top_templates": agg.top_templates_from_rollup(rollup),
+        "global_stats": agg.global_stats_from_rollup(rollup),
     }
     for r in DEFAULT_ROUTES:
         sinks[f"route_{r.name}"] = parsed.filter(r.predicate)
     if now is not None:
-        sinks["alerts"] = detect_all(parsed, now, config.anomaly)
+        sinks["alerts"] = detect_all_from_rollup(rollup, now, config.anomaly)
     return sinks
 
 
@@ -108,7 +119,7 @@ def build_sinks(
     parsed, templates, _ = parse_pipeline(transcripts, config)
     enriched = with_route(enrich_with_lookup(parsed, role_tool_lookup(spark)))
     sinks: dict[str, DataFrame] = {"parsed_turns": enriched, "templates": templates}
-    sinks.update(_downstream_sinks(enriched, config, now))
+    sinks.update(_downstream_sinks(enriched, agg.minute_rollup(enriched), config, now))
     return sinks
 
 
@@ -156,8 +167,8 @@ def run(
         result.sinks[name] = store.read(name)
 
     # Stage 1-2: the expensive parse+mine pass, committed once; every
-    # downstream aggregate then reads the committed columnar snapshot instead
-    # of re-scanning the raw input (one big scan total, not one per sink).
+    # downstream sink then reads the committed columnar snapshot instead of
+    # re-scanning the raw input.
     parsed_lazy = templates_lazy = None
 
     def build_parse():
@@ -179,9 +190,17 @@ def run(
     )
     commit_stage("templates", lambda: build_parse()[1])
 
+    # Stage 3: the routes filter the snapshot; the aggregates and alerts
+    # re-aggregate its minute rollup, persisted so the snapshot is scanned
+    # once for all of them (the rollup grows with sources × templates ×
+    # minutes, not rows). A run whose sinks all resume never materializes it.
     parsed_committed = result.sinks["parsed_turns"]
-    for name, df in _downstream_sinks(parsed_committed, config, now).items():
-        commit_stage(name, lambda df=df: df)
+    rollup = agg.minute_rollup(parsed_committed).persist()
+    try:
+        for name, df in _downstream_sinks(parsed_committed, rollup, config, now).items():
+            commit_stage(name, lambda df=df: df)
+    finally:
+        rollup.unpersist()
     return result
 
 
@@ -277,7 +296,12 @@ def maintain(
 def _committed_by_run(store: SnapshotStore, run_id: str) -> set[str]:
     try:
         m = store.manifest()
-    except Exception:
+    except AnalysisException as e:
+        # A store whose _manifest dir is gone has nothing to resume; an
+        # empty one reads as zero rows and needs no special case.
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        logger.debug("no manifest to resume %s from: %s", run_id, e)
         return set()
     rows = (
         m.filter((m.run_id == run_id) & (m.partition_id == -1) & (m.status == "committed"))

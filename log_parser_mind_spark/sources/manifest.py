@@ -22,6 +22,7 @@ import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import MANIFEST
 
@@ -52,6 +53,10 @@ class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # (snapshot, schema) of each sink's latest commit through this store:
+        # read() hands the schema to the reader, which then skips the one-job
+        # footer inference. One entry per sink, however many epochs commit.
+        self._written: dict[str, tuple[int, StructType]] = {}
         os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
 
     # -- commit protocol ----------------------------------------------------
@@ -165,6 +170,7 @@ class SnapshotStore:
             for pid, n in counts
         ] + [(run_id, sink, snapshot, -1, None, int(total), committed_at, "committed")]
         self._write_manifest_rows(rows)
+        self._written[sink] = (snapshot, out.schema)
         return snapshot
 
     def _write_manifest_rows(self, rows: list[tuple]) -> None:
@@ -392,9 +398,9 @@ class SnapshotStore:
         snapshot = self.latest_snapshot(sink) if snapshot is None else snapshot
         if snapshot is None:
             raise FileNotFoundError(f"no committed snapshot for sink {sink!r}")
-        return self.spark.read.parquet(
-            os.path.join(self._sink_dir(sink), f"snapshot={snapshot}")
-        )
+        written, schema = self._written.get(sink, (None, None))
+        reader = self.spark.read.schema(schema) if written == snapshot else self.spark.read
+        return reader.parquet(os.path.join(self._sink_dir(sink), f"snapshot={snapshot}"))
 
     def attach_views(
         self, prefix: str = "logmind", append_sinks: tuple[str, ...] = ("stream_parsed",)

@@ -5,6 +5,7 @@
 import datetime as dt
 
 import pandas as pd
+import pytest
 
 from log_parser_mind_spark.config import AnomalyConfig
 from log_parser_mind_spark.operators import anomaly
@@ -127,3 +128,59 @@ def test_severity_buckets(spark):
     df = spark.createDataFrame([(2.5,), (3.5,), (4.5,), (5.5,)], "z double")
     got = [r.s for r in df.select(anomaly.severity_expr(F.col("z")).alias("s")).collect()]
     assert got == ["low", "medium", "high", "critical"]
+
+
+def _spiky_transcripts(spark):
+    """One hour of turns before NOW: `user` logs one ERROR template at 3-4
+    rows a minute, then 40 a minute over the last three minutes (error spike
+    and volume spike); `system` logs INFO at 5-6 a minute and falls silent
+    ten minutes before NOW (volume drop); `assistant` logs a steady WARN."""
+    rows = []
+
+    def add(role, minute, n, text):
+        for j in range(n):
+            ts = BASE + dt.timedelta(minutes=minute, seconds=j % 60)
+            rows.append((f"c_{role}", len(rows), role, text.format(j=j), "none", ts))
+
+    for i in range(60):
+        add("user", i, 40 if i >= 57 else 3 + i % 2, "ERROR: Timeout after {j}s waiting for response from svc")
+        if i < 50:
+            add("system", i, 5 + i % 2, "INFO: Backup completed: {j} files")
+        add("assistant", i, 4, "WARN: Disk usage at {j}% on volume data")
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+
+
+def test_job_alerts_match_oracle(spark, tmp_path):
+    """The committed ``alerts`` sink of ``plans.job.run`` equals the pandas
+    z-score oracle over the error series (per template, summed) and the
+    volume series (per source, averaged) built from the oracle's parsed rows."""
+    from log_parser_mind_spark.plans import job
+
+    transcripts = _spiky_transcripts(spark)
+    result = job.run(spark, transcripts, root=str(tmp_path / "wh"), run_id="a", now=NOW)
+    alerts = result.sinks["alerts"].collect()
+    assert {"error_spike", "volume_spike", "volume_drop"} <= {a.type for a in alerts}
+
+    parsed = oracle.run_pipeline(transcripts.toPandas())["parsed"]
+    parsed = parsed.assign(ts=parsed["ts"].dt.floor("min"))
+
+    def series(rows, key):
+        return rows.groupby([key, "ts"]).size().astype(float).reset_index(name="value").rename(
+            columns={key: "key"}
+        )
+
+    cfg = AnomalyConfig()
+    errors = parsed[parsed["template"].map(oracle.severity_class) == "error"]
+    want = pd.concat([
+        oracle.zscore_alerts(series(errors, "template_id"), pd.Timestamp(NOW), cfg.error_threshold,
+                             cfg.min_points, agg="sum"),
+        oracle.zscore_alerts(series(parsed, "source"), pd.Timestamp(NOW), cfg.volume_threshold,
+                             cfg.min_points, agg="avg"),
+    ])
+    got = sorted((a.key, a.value, a.zscore) for a in alerts)
+    assert [k for k, _, _ in got] == sorted(want["key"])
+    for (key, value, z), (_, w) in zip(got, want.sort_values("key").iterrows()):
+        assert value == pytest.approx(w["value"], rel=1e-12), key
+        assert z == pytest.approx(w["zscore"], rel=1e-9), key

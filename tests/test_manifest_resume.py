@@ -4,6 +4,7 @@ reconcile with sink row counts.
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -398,3 +399,84 @@ def test_append_style_tag_blocks_keep_last_pruning(spark, transcripts, tmp_path)
     assert store.visible_snapshots("events_epochs") == [sid]
     with pytest.raises(ValueError, match="append_style"):
         store.vacuum("events_epochs", keep_last=1)
+
+
+NOW = "2024-01-02 00:00:00"
+ROUTE_SINKS = ["route_errors", "route_warnings", "route_info"]
+ROLLUP_SINKS = ["hourly_rollup", "error_rates", "top_templates", "global_stats", "alerts"]
+
+
+def _group_stats(spark, group):
+    """(jobs, Σ inputRecords) of the jobs run under ``group``, read from
+    Spark's status store; a stage skipped because its shuffle output was
+    reused is not counted."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # the store is fed asynchronously
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stage_ids = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    listed = sc._jsc.sc().statusStore().stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0), None
+    )
+    stages = [listed.apply(i) for i in range(listed.size())]
+    records = sum(
+        s.inputRecords()
+        for s in stages
+        if s.stageId() in stage_ids and s.status().toString() == "COMPLETE"
+    )
+    return len(jobs), records
+
+
+def _in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_read_back_reuses_the_written_schema(spark, transcripts, tmp_path):
+    """commit_stage reads every committed sink back; the store hands the
+    reader the schema it just wrote, so the read runs no inference job and
+    yields the schema inference would (parsed_turns' month partition too)."""
+    root = str(tmp_path / "wh8")
+    result = job.run(spark, transcripts, root=root, run_id="rb", now=NOW)
+    for name in ("parsed_turns", "hourly_rollup"):
+        inferred = spark.read.parquet(os.path.join(root, name, "snapshot=0")).schema
+        assert result.sinks[name].schema == inferred, name
+    store = SnapshotStore(spark, root)
+    store.commit(result.sinks["hourly_rollup"], "hourly_copy", run_id="rb")
+    copy = _in_group(spark, "read_back", lambda: store.read("hourly_copy"))
+    assert copy.schema == result.sinks["hourly_rollup"].schema
+    assert _group_stats(spark, "read_back")[0] == 0  # no schema-inference job
+
+
+def test_aggregate_and_alert_sinks_scan_the_snapshot_once(spark, transcripts, tmp_path):
+    """The aggregate and alert sinks re-aggregate one persisted minute
+    rollup, so between them they read the parsed_turns snapshot's rows once
+    (plus a few cached batches), where one scan each would read ~8N; each
+    route sink still reads the N rows."""
+    root = str(tmp_path / "wh9")
+    job.run(spark, transcripts, root=root, run_id="rs", now=NOW)
+    store = SnapshotStore(spark, root)
+    n = store.read("parsed_turns").count()
+
+    def recompute(sinks, group):
+        for sink in sinks:
+            shutil.rmtree(os.path.join(root, sink))
+        manifest_rows = store.manifest().count()  # the resume check reads every one
+        result = _in_group(spark, group, lambda: job.run(spark, transcripts, root=root, run_id="rs", now=NOW))
+        assert sorted(result.timings) == sorted(sinks)
+        return _group_stats(spark, group)[1] - manifest_rows
+
+    assert recompute(ROUTE_SINKS, "scan_routes") == 3 * n
+    assert n <= recompute(ROLLUP_SINKS, "scan_rollup_sinks") < 2 * n
+
+
+def test_missing_manifest_resumes_nothing(spark, tmp_path):
+    root = str(tmp_path / "wh10")
+    store = SnapshotStore(spark, root)
+    assert job._committed_by_run(store, "r") == set()  # empty manifest dir
+    shutil.rmtree(os.path.join(root, "_manifest"))
+    assert job._committed_by_run(store, "r") == set()
