@@ -38,10 +38,35 @@ sys.path.insert(0, os.path.join(REPO, "bench"))
 from scaling import build_zip, prepare_input, run_at  # noqa: E402
 
 
+def _zero() -> dict:
+    return {
+        "tasks": 0, "run_ms": 0, "cpu_ms": 0, "gc_ms": 0, "deser_ms": 0,
+        "result_ser_ms": 0, "fetch_wait_ms": 0, "shuffle_write_ms": 0,
+        "shuffle_read_mb": 0.0, "shuffle_write_mb": 0.0, "input_mb": 0.0,
+        "output_mb": 0.0, "wall_ms": 0,
+    }
+
+
+def sum_stages(stages) -> dict:
+    """Column totals of per-stage metric dicts."""
+    totals = _zero()
+    for s in stages:
+        for k in totals:
+            totals[k] += s[k]
+    return totals
+
+
 def parse_eventlogs(evdir: str) -> dict:
-    """Aggregate TaskEnd metrics per stage across every app log in evdir."""
+    """Aggregate TaskEnd metrics per stage across every app log in evdir.
+
+    Each stage also carries its name, its wall time (submission to
+    completion) and ``description``: the ``spark.job.description`` of the
+    job that ran it, or None."""
     stages: dict[int, dict] = {}
     names: dict[int, str] = {}
+    walls: dict[int, int] = {}
+    job_desc: dict[int, str | None] = {}
+    stage_job: dict[int, int] = {}
     paths = []
     for dirpath, _dirs, files in os.walk(evdir):
         for fn in files:
@@ -57,38 +82,44 @@ def parse_eventlogs(evdir: str) -> dict:
                 except json.JSONDecodeError:
                     continue
                 ev = e.get("Event")
-                if ev == "SparkListenerStageCompleted":
+                if ev == "SparkListenerJobStart":
+                    job_desc[e["Job ID"]] = (e.get("Properties") or {}).get("spark.job.description")
+                    # A job also lists the stages it skips; those ran in the
+                    # first job that listed them.
+                    for si in e.get("Stage Infos", []):
+                        stage_job.setdefault(si["Stage ID"], e["Job ID"])
+                elif ev == "SparkListenerStageCompleted":
                     info = e.get("Stage Info", {})
                     names[info.get("Stage ID")] = info.get("Stage Name", "?")
+                    walls[info.get("Stage ID")] = (info.get("Completion Time") or 0) - (
+                        info.get("Submission Time") or 0
+                    )
                 elif ev == "SparkListenerTaskEnd":
                     tm = e.get("Task Metrics") or {}
-                    sid = e.get("Stage ID")
-                    s = stages.setdefault(
-                        sid,
-                        {"tasks": 0, "run_ms": 0, "cpu_ms": 0, "gc_ms": 0,
-                         "shuffle_read_mb": 0.0, "shuffle_write_mb": 0.0,
-                         "input_mb": 0.0},
-                    )
+                    s = stages.setdefault(e.get("Stage ID"), _zero())
                     s["tasks"] += 1
                     s["run_ms"] += tm.get("Executor Run Time", 0)
                     s["cpu_ms"] += tm.get("Executor CPU Time", 0) // 1_000_000
                     s["gc_ms"] += tm.get("JVM GC Time", 0)
+                    s["deser_ms"] += tm.get("Executor Deserialize Time", 0)
+                    s["result_ser_ms"] += tm.get("Result Serialization Time", 0)
                     sr = tm.get("Shuffle Read Metrics") or {}
                     s["shuffle_read_mb"] += (
                         sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
                     ) / 1e6
+                    s["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
                     sw = tm.get("Shuffle Write Metrics") or {}
                     s["shuffle_write_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
+                    s["shuffle_write_ms"] += sw.get("Shuffle Write Time", 0) // 1_000_000
                     im = tm.get("Input Metrics") or {}
                     s["input_mb"] += im.get("Bytes Read", 0) / 1e6
+                    om = tm.get("Output Metrics") or {}
+                    s["output_mb"] += om.get("Bytes Written", 0) / 1e6
     for sid, s in stages.items():
-        s["name"] = (names.get(sid) or "?").split("\n")[0][:60]
-    totals = {
-        k: sum(s[k] for s in stages.values())
-        for k in ("run_ms", "cpu_ms", "gc_ms", "shuffle_read_mb", "shuffle_write_mb", "input_mb")
-    }
-    totals["tasks"] = sum(s["tasks"] for s in stages.values())
-    return {"stages": stages, "totals": totals}
+        s["name"] = (names.get(sid) or "?").split("\n")[0][:80]
+        s["wall_ms"] = walls.get(sid, 0)
+        s["description"] = job_desc.get(stage_job.get(sid))
+    return {"stages": stages, "totals": sum_stages(stages.values())}
 
 
 def main() -> None:

@@ -20,38 +20,17 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+# The repo root first: ``bench`` then resolves to bench.py, not this directory.
+sys.path[:0] = [REPO, os.path.join(REPO, "bench")]
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from log_parser_mind_spark.config import PipelineConfig  # noqa: E402
-from log_parser_mind_spark.operators import aggregate as agg  # noqa: E402
+from bench import _noop, run_pipeline  # noqa: E402
+from eventlog_cpu import parse_eventlogs, sum_stages  # noqa: E402
 from log_parser_mind_spark.operators import dedup  # noqa: E402
-from log_parser_mind_spark.operators.parse import parse_pipeline  # noqa: E402
 from log_parser_mind_spark.session import get_spark  # noqa: E402
 from log_parser_mind_spark.sources.tables import documents_as_transcripts, read_table  # noqa: E402
 from log_parser_mind_spark.synth import synth_transcripts  # noqa: E402
-
-
-def _noop(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def run_pipeline(spark, transcripts):
-    parsed_lazy, templates, _ = parse_pipeline(
-        transcripts, PipelineConfig(), include_text=False
-    )
-    tmp = tempfile.mkdtemp(prefix="logmind_prof_")
-    try:
-        parsed_lazy.write.mode("overwrite").parquet(f"{tmp}/parsed")
-        parsed = spark.read.parquet(f"{tmp}/parsed")
-        _noop(templates)
-        _noop(agg.hourly_rollup(parsed))
-        _noop(agg.error_rates(parsed))
-        _noop(agg.top_templates(parsed))
-        _noop(agg.global_stats(parsed))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def main() -> None:
@@ -205,82 +184,14 @@ def main() -> None:
     spark.stop()
 
     # ---- event-log attribution: job description -> stages -> task metrics
-    job_q: dict[int, str] = {}
-    stage_job: dict[int, int] = {}
-    stages: dict[int, dict] = {}
-    names: dict[int, str] = {}
-    sub_ms: dict[int, int] = {}
-    for dirpath, _dirs, files in os.walk(evdir):
-        for fn in files:
-            path = os.path.join(dirpath, fn)
-            if os.path.isdir(path) or fn.startswith("."):
-                continue
-            with open(path, errors="replace") as fh:
-                for line in fh:
-                    try:
-                        e = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-                    ev_t = e.get("Event")
-                    if ev_t == "SparkListenerJobStart":
-                        desc = (e.get("Properties") or {}).get("spark.job.description", "")
-                        if desc.startswith("Q:"):
-                            job_q[e["Job ID"]] = desc[2:]
-                        for si in e.get("Stage Infos", []):
-                            stage_job[si["Stage ID"]] = e["Job ID"]
-                    elif ev_t == "SparkListenerStageSubmitted":
-                        info = e.get("Stage Info", {})
-                        sub_ms[info.get("Stage ID")] = info.get("Submission Time", 0)
-                        names[info.get("Stage ID")] = info.get("Stage Name", "?")
-                    elif ev_t == "SparkListenerStageCompleted":
-                        info = e.get("Stage Info", {})
-                        names[info.get("Stage ID")] = info.get("Stage Name", "?")
-                        sid = info.get("Stage ID")
-                        s = stages.setdefault(sid, _zero())
-                        s["wall_ms"] = (info.get("Completion Time", 0) or 0) - (
-                            info.get("Submission Time", sub_ms.get(sid, 0)) or 0
-                        )
-                    elif ev_t == "SparkListenerTaskEnd":
-                        tm = e.get("Task Metrics") or {}
-                        sid = e.get("Stage ID")
-                        s = stages.setdefault(sid, _zero())
-                        s["tasks"] += 1
-                        s["run_ms"] += tm.get("Executor Run Time", 0)
-                        s["cpu_ms"] += tm.get("Executor CPU Time", 0) // 1_000_000
-                        s["gc_ms"] += tm.get("JVM GC Time", 0)
-                        s["deser_ms"] += tm.get("Executor Deserialize Time", 0)
-                        s["result_ser_ms"] += tm.get("Result Serialization Time", 0)
-                        sr = tm.get("Shuffle Read Metrics") or {}
-                        s["sh_read_mb"] += (
-                            sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
-                        ) / 1e6
-                        s["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
-                        sw = tm.get("Shuffle Write Metrics") or {}
-                        s["sh_write_mb"] += sw.get("Shuffle Bytes Written", 0) / 1e6
-                        s["sh_write_ms"] += sw.get("Shuffle Write Time", 0) // 1_000_000
-                        im = tm.get("Input Metrics") or {}
-                        s["input_mb"] += im.get("Bytes Read", 0) / 1e6
-                        om = tm.get("Output Metrics") or {}
-                        s["output_mb"] += om.get("Bytes Written", 0) / 1e6
-
     report: dict[str, dict] = {}
-    for sid, s in sorted(stages.items()):
-        q = job_q.get(stage_job.get(sid, -1))
-        if q is None:
-            q = "_untracked"
+    for sid, st in sorted(parse_eventlogs(evdir)["stages"].items()):
+        desc = st["description"] or ""
+        q = desc[2:] if desc.startswith("Q:") else "_untracked"
         r = report.setdefault(q, {"stages": [], "wall_s": timings.get(q)})
-        s2 = dict(s)
-        s2["stage_id"] = sid
-        s2["name"] = names.get(sid, "?")[:80]
-        r["stages"].append(s2)
-
-    for q, r in report.items():
-        tot = _zero()
-        for s in r["stages"]:
-            for k in tot:
-                if k in s:
-                    tot[k] += s[k]
-        r["totals"] = tot
+        r["stages"].append({"stage_id": sid, **st})
+    for r in report.values():
+        r["totals"] = sum_stages(r["stages"])
 
     out_path = "/tmp/profile_suite_report.json"
     with open(out_path, "w") as fh:
@@ -296,28 +207,10 @@ def main() -> None:
         tt = r["totals"]
         print(
             f"{q:<22}{t:>8.2f}{tt['run_ms']/1e3:>9.1f}{tt['cpu_ms']/1e3:>9.1f}"
-            f"{tt['gc_ms']/1e3:>6.1f}{tt['sh_read_mb']:>8.1f}{tt['sh_write_mb']:>8.1f}"
+            f"{tt['gc_ms']/1e3:>6.1f}{tt['shuffle_read_mb']:>8.1f}{tt['shuffle_write_mb']:>8.1f}"
             f"{tt['input_mb']:>8.1f}{tt['tasks']:>7}{len(r['stages']):>7}"
         )
     print(f"\nfull report: {out_path}  (eventlog dir kept: {evdir})")
-
-
-def _zero() -> dict:
-    return {
-        "tasks": 0,
-        "run_ms": 0,
-        "cpu_ms": 0,
-        "gc_ms": 0,
-        "deser_ms": 0,
-        "result_ser_ms": 0,
-        "sh_read_mb": 0.0,
-        "sh_write_mb": 0.0,
-        "sh_write_ms": 0,
-        "fetch_wait_ms": 0,
-        "input_mb": 0.0,
-        "output_mb": 0.0,
-        "wall_ms": 0,
-    }
 
 
 if __name__ == "__main__":

@@ -82,13 +82,6 @@ def redact_value_expr(value: Column, config: RedactorConfig | None = None) -> Co
     return F.when(value.rlike(combined), redact_expr(value, config)).otherwise(value)
 
 
-def redact_map_values_expr(variables: Column, config: RedactorConfig | None = None) -> Column:
-    """RedactVariables (redactor.go:110-121) over a Map<String,String> column."""
-    if not active_patterns(config):
-        return variables
-    return F.transform_values(variables, lambda _k, v: redact_value_expr(v, config))
-
-
 def detect_pii_expr(text: Column, config: RedactorConfig | None = None) -> Column:
     """DetectPII (redactor.go:139-149) → sorted array of PII type names found.
 

@@ -118,15 +118,6 @@ def top_templates_from_rollup(rollup: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def per_source_rollup(hourly: DataFrame) -> DataFrame:
-    """A5 — second-stage rollup of the hourly MV (001_clickhouse_schema.sql:66)."""
-    return hourly.groupBy("source").agg(
-        F.sum("log_count").alias("total_logs"),
-        F.sum("total_original_size").alias("total_original_size"),
-        F.sum("total_compressed_size").alias("total_compressed_size"),
-    )
-
-
 def template_stats(templates: DataFrame) -> DataFrame:
     """A6 — drain.GetStats (drain.go:419-438): cluster count, Σ size, avg."""
     return templates.agg(
@@ -167,16 +158,6 @@ def recent_window(
         series.filter(F.col("ts") > F.expr(f"timestamp'{now}' - interval {window_minutes} minutes"))
         .groupBy(key)
         .agg(fn.alias("recent"))
-    )
-
-
-def conditional_stats(df: DataFrame, flag: str = "success", value: str = "confidence") -> DataFrame:
-    """A10/A11 — COUNT(*) FILTER (WHERE success), AVG(...) FILTER
-    (internal/storage/postgres/client.go:342-372)."""
-    return df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(F.col(flag), 1)).alias("successes"),
-        F.avg(F.when(F.col(flag), F.col(value))).alias("avg_success_value"),
     )
 
 

@@ -117,11 +117,6 @@ def _volume_alerts(rollup: DataFrame, now: str, config: AnomalyConfig) -> DataFr
     )
 
 
-def detect_error_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
-    """checkErrorAnomaly (main.go:113-162) over event time."""
-    return _error_alerts(minute_rollup(parsed), now, config or AnomalyConfig())
-
-
 def detect_volume_anomalies(parsed: DataFrame, now: str, config: AnomalyConfig | None = None) -> DataFrame:
     """checkVolumeAnomaly (main.go:164-222): |z|, spike vs drop by direction."""
     return _volume_alerts(minute_rollup(parsed), now, config or AnomalyConfig())

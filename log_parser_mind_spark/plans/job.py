@@ -18,6 +18,7 @@ used by tests, __spark_entry__ and the DuckDB oracle comparisons.
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from dataclasses import dataclass, field
@@ -36,49 +37,6 @@ from ..sources.manifest import SnapshotStore
 logger = logging.getLogger(__name__)
 
 PARSED_SORT = ["source", "template_id", "ts"]  # 001_clickhouse_schema.sql:21 sort key
-
-
-def timed_pipeline_stages(spark, transcripts, config=None) -> dict[str, float]:
-    """Per-stage wall times of the flagship pipeline (bench/debug aid).
-
-    Uses the write-then-aggregate shape, NOT an in-memory persist of the wide
-    parsed rows: caching text+map rows in memory costs ~60 s of cache build
-    at any core count at sf0.1 and OOMs the default heap outright at the sf1
-    notch (~48M rows) — the same lesson the production job encodes
-    (plans/job.run commits a parquet snapshot and aggregates from it)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import time as _time
-
-    from ..operators.parse import finalize_parsed, masked_transcripts
-    from ..operators import miner as _miner
-
-    config = config or PipelineConfig()
-    out: dict[str, float] = {}
-
-    def t(name, fn):
-        t0 = _time.time()
-        r = fn()
-        out[name] = round(_time.time() - t0, 2)
-        return r
-
-    masked = masked_transcripts(transcripts, config.drain.max_depth)
-    assignments = _miner.mine_assignments(masked, config).persist()
-    t("mine", lambda: assignments.count())
-    parsed = finalize_parsed(_miner.assign_templates(masked, assignments, config), config)
-    parsed = with_route(enrich_with_lookup(parsed, role_tool_lookup(spark)))
-    tmp = _tempfile.mkdtemp(prefix="logmind_stages_")
-    try:
-        t("parse_finalize_write", lambda: parsed.write.mode("overwrite").parquet(f"{tmp}/parsed"))
-        snap = spark.read.parquet(f"{tmp}/parsed")
-        t("aggregates", lambda: [
-            df.write.format("noop").mode("overwrite").save()
-            for df in _downstream_sinks(snap, agg.minute_rollup(snap), config, None).values()
-        ])
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-        assignments.unpersist()
-    return out
 
 
 @dataclass
@@ -108,6 +66,14 @@ def _downstream_sinks(
     return sinks
 
 
+def _enriched_parse(
+    spark: SparkSession, transcripts: DataFrame, config: PipelineConfig
+) -> tuple[DataFrame, DataFrame]:
+    """The shared parse plan: (enriched+routed parsed_turns, templates)."""
+    parsed, templates, _ = parse_pipeline(transcripts, config)
+    return with_route(enrich_with_lookup(parsed, role_tool_lookup(spark))), templates
+
+
 def build_sinks(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -116,8 +82,7 @@ def build_sinks(
 ) -> dict[str, DataFrame]:
     """Build every sink DataFrame lazily from one shared parse plan."""
     config = config or PipelineConfig()
-    parsed, templates, _ = parse_pipeline(transcripts, config)
-    enriched = with_route(enrich_with_lookup(parsed, role_tool_lookup(spark)))
+    enriched, templates = _enriched_parse(spark, transcripts, config)
     sinks: dict[str, DataFrame] = {"parsed_turns": enriched, "templates": templates}
     sinks.update(_downstream_sinks(enriched, agg.minute_rollup(enriched), config, now))
     return sinks
@@ -169,15 +134,7 @@ def run(
     # Stage 1-2: the expensive parse+mine pass, committed once; every
     # downstream sink then reads the committed columnar snapshot instead of
     # re-scanning the raw input.
-    parsed_lazy = templates_lazy = None
-
-    def build_parse():
-        nonlocal parsed_lazy, templates_lazy
-        if parsed_lazy is None:
-            p, t, _ = parse_pipeline(transcripts, config)
-            parsed_lazy = with_route(enrich_with_lookup(p, role_tool_lookup(spark)))
-            templates_lazy = t
-        return parsed_lazy, templates_lazy
+    build_parse = functools.cache(lambda: _enriched_parse(spark, transcripts, config))
 
     # parsed_turns is month-partitioned (001_clickhouse_schema.sql:20
     # PARTITION BY toYYYYMM) so SnapshotStore.expire() can TTL whole month

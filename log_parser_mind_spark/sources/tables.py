@@ -133,11 +133,6 @@ def scan_with_min_parallelism(df: DataFrame, spark: SparkSession, path: str) -> 
     return df.repartition(target)
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = os.path.join(sf_dir, "events.parquet")
-    return scan_with_min_parallelism(spark.read.parquet(path), spark, path)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     return scan_with_min_parallelism(spark.read.parquet(path), spark, path)

@@ -48,15 +48,6 @@ def streaming_error_rates(transcripts: DataFrame, watermark: str = "10 minutes")
     )
 
 
-def streaming_volume_windows(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """T7 — sliding 5-minute volume evaluation (1-minute slide)."""
-    return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "5 minutes", "1 minute").alias("w"), F.col("role").alias("source"))
-        .agg(F.count(F.lit(1)).alias("volume"))
-    )
-
-
 def _checkpoint_lineage(root: str, query_name: str, checkpoint_location: str | None) -> tuple[str, str]:
     """Resolve the checkpoint dir and its lineage id (shared by every
     foreachBatch pipeline; ONE implementation so the stale-commit guard
